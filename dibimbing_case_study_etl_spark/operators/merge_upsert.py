@@ -10,19 +10,28 @@ program:
    set-oriented merge must pre-dedup with an explicit ordering
    (``latest_per_key`` on ``order_by``).
 2. **Split-update semantics** — on key match only ``update_cols`` take the
-   source value; every other column keeps the target value (L1 deliberately
-   does NOT update date/hour, `load:56-60`; L2 updates all non-key cols,
-   `upsert_l2_for_ds.sql:28-33`).
+   source value, null included; every other column keeps the target value
+   (L1 deliberately does NOT update date/hour, `load:56-60`; L2 updates all
+   non-key cols, `upsert_l2_for_ds.sql:28-33`).
 3. **Partition-scoped atomicity** — only partitions present in the source
    are read back and rewritten (`partitionOverwriteMode=dynamic``); untouched
    partitions are never opened. Requires the partition column to be
    functionally dependent on the merge keys (here: date = date(ts), ts ∈ PK),
    so a matched row can never migrate between partitions.
 
+Plan shape: ONE full outer join of the touched target slice with the deduped
+source on the keys. A presence flag on each side picks every column:
+``update_cols`` from the source where a source row exists, the others from
+the target where a target row exists (matched rows, unmatched target rows
+and inserts in one pass). The flags, not ``coalesce``, make a null source
+value overwrite. The target is read with the deduped source's schema, so no
+job is spent inferring it; this is a contract: the target was created from
+a source with the same columns (its first merge writes exactly that).
+
 Scale: the merge cost is O(touched partitions), not O(table). The join is an
-equi-join on the PK — at 100 TB both sides arrive hash-partitioned by key,
-and the source side (one ingest day) is typically broadcastable. Re-running
-any batch converges (idempotency, `README.md:38, 261`).
+equi-join on the PK — at 100 TB both sides arrive hash-partitioned by key
+(the source already is, by the dedup window). Re-running any batch converges
+(idempotency, `README.md:38, 261`).
 
 **Concurrency contract (SINGLE WRITER, fenced).** Plain Parquet has no
 transaction log: dynamic partition overwrite is atomic per partition
@@ -249,6 +258,9 @@ def merge_upsert(
     partition-scoped merging cannot see across partitions by design
     (that's what keeps it O(touched partitions)). The property suite
     demonstrates the violation mode (tests/test_property.py).
+
+    CONTRACT: the table at ``target_path`` was created from a source with
+    the same columns as ``source``; it is read back with the source's schema.
     """
     keys = list(keys)
     update_cols = list(update_cols)
@@ -289,27 +301,33 @@ def _merge_impl(
         src.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
         return -1  # unknown without an extra action; caller can count
 
-    target = spark.read.parquet(target_path)
+    # The target was created from a source of the same columns, so its
+    # schema is the source's: no footer-reading inference job.
+    target = spark.read.schema(src.schema).parquet(target_path)
 
     # Only partitions the source touches participate (partition pruning on
-    # this IN-filter keeps the merge O(touched partitions)).
-    touched = [r[0] for r in src.select(partition_col).distinct().collect()]
+    # this IN-filter keeps the merge O(touched partitions)). Deduping never
+    # drops a partition value, so the raw source gives the same set without
+    # the window's shuffle.
+    touched = [r[0] for r in source.select(partition_col).distinct().collect()]
     tgt_slice = target.filter(F.col(partition_col).isin(touched))
 
-    non_update = [c for c in target.columns if c not in update_cols and c not in keys]
-    matched = tgt_slice.alias("t").join(src.alias("s"), on=keys, how="inner").select(
-        *[F.col(k) for k in keys],
-        *[F.col(f"s.{c}").alias(c) for c in update_cols],
-        *[F.col(f"t.{c}").alias(c) for c in non_update],
+    # One full outer join on the keys. Presence flags, not coalesce, pick
+    # each side, so a null source value still overwrites its target value.
+    s_in = F.col("s.__in_s").isNotNull()
+    t_in = F.col("t.__in_t").isNotNull()
+    joined = tgt_slice.withColumn("__in_t", F.lit(True)).alias("t").join(
+        src.withColumn("__in_s", F.lit(True)).alias("s"), on=keys, how="full_outer"
     )
-    unmatched_tgt = tgt_slice.join(src, on=keys, how="left_anti")
-    inserts = src.join(tgt_slice, on=keys, how="left_anti")
 
-    result = (
-        unmatched_tgt.select(*target.columns)
-        .unionByName(matched.select(*target.columns))
-        .unionByName(inserts.select(*target.columns))
-    )
+    def pick(c: str) -> Column:
+        if c in keys:
+            return F.col(c)  # the USING join already merged both sides' keys
+        if c in update_cols:
+            return F.when(s_in, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+        return F.when(t_in, F.col(f"t.{c}")).otherwise(F.col(f"s.{c}")).alias(c)
+
+    result = joined.select(*[pick(c) for c in src.columns])
 
     # Self-referential overwrite: the plan reads target_path. Dynamic
     # partition overwrite stages output before committing, but Spark still

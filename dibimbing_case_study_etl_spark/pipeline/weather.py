@@ -36,8 +36,10 @@ from dibimbing_case_study_etl_spark.schemas import (
     L1_UPDATE_COLS,
     L2_UPDATE_COLS,
     RAW_OPEN_METEO_SCHEMA,
+    STAGING_SCHEMA,
     WEATHER_COLUMNS,
     WEATHER_PK,
+    WEATHER_SCHEMA,
 )
 
 log = logging.getLogger(__name__)
@@ -86,18 +88,15 @@ def normalize_to_staging(
     parquet. ``date``/``hour`` are derived from the *naive local* time
     string (pandas derives them from the tz-localized timestamp — same
     values); ``ts`` is the UTC instant via to_utc_timestamp.
+
+    Q1–Q3 run as ONE aggregate over the exploded rows, before the write.
+    Q1 (array lengths) is computed per document before the explode and
+    carried as a row check: ``arrays_zip`` pads the shorter array with
+    nulls (a missing array counts as empty), so a mismatch always yields
+    rows that carry the violation.
     """
     fallback = fallback or {}
     raw = spark.read.schema(RAW_OPEN_METEO_SCHEMA).json(raw_path, multiLine=True)
-
-    # Q1: parallel arrays must align (`normalize:55-56`)
-    expect(
-        raw,
-        row_checks={
-            "hourly_arrays_same_length": F.size("hourly.time") == F.size("hourly.temperature_2m")
-        },
-        require_nonempty=True,
-    )
 
     # config fallback for missing payload metadata (`normalize:131-133`)
     tz = F.coalesce(F.col("timezone"), F.lit(fallback.get("timezone")))
@@ -108,7 +107,16 @@ def normalize_to_staging(
         lat.alias("latitude"),
         lon.alias("longitude"),
         tz.alias("timezone"),
-        F.posexplode(F.arrays_zip("hourly.time", "hourly.temperature_2m")).alias("pos", "h"),
+        # Q1: parallel arrays must align (`normalize:55-56`)
+        (F.size("hourly.time") == F.size("hourly.temperature_2m")).alias("same_length"),
+        F.posexplode(
+            F.arrays_zip(
+                F.coalesce("hourly.time", F.array().cast("array<string>")).alias("time"),
+                F.coalesce(
+                    "hourly.temperature_2m", F.array().cast("array<double>")
+                ).alias("temperature_2m"),
+            )
+        ).alias("pos", "h"),
     )
     local_ts = F.to_timestamp(F.col("h.time"))
     df = zipped.select(
@@ -122,10 +130,16 @@ def normalize_to_staging(
         F.lit(ds).cast("date").alias("load_ds"),
         F.lit(SOURCE_NAME).alias("source"),
         "pos",
+        "same_length",
     )
 
-    # Q2 + Q3 (`normalize:93-96`)
-    expect(df, require_nonempty=True, require_some_nonnull=("temperature_c",))
+    # Q1 + Q2 + Q3 (`normalize:55-56, 93-96`) in one aggregate
+    expect(
+        df,
+        row_checks={"hourly_arrays_same_length": F.col("same_length")},
+        require_nonempty=True,
+        require_some_nonnull=("temperature_c",),
+    )
 
     out = staging_path_for_ds(staging_dir, ds)
     # `pos` (array position) rides along so L1 can reproduce the reference's
@@ -142,11 +156,10 @@ def load_staging_to_l1(spark: SparkSession, staging_path: str, l1_path: str) -> 
     date/hour). In-batch duplicates: highest array position wins (the
     reference's sequential execute_values makes the last row win).
     """
-    src = spark.read.parquet(staging_path)
     merge_upsert(
         spark,
         target_path=l1_path,
-        source=src.select(*WEATHER_COLUMNS, "pos"),
+        source=spark.read.schema(STAGING_SCHEMA).parquet(staging_path),
         keys=list(WEATHER_PK),
         update_cols=list(L1_UPDATE_COLS),
         order_by=[F.desc("load_ds"), F.desc("pos")],
@@ -159,14 +172,16 @@ def build_l2_for_ds(spark: SparkSession, l1_path: str, l2_path: str, ds: str) ->
     """L1 → L2 silver build for one ``ds`` (parity:
     `upsert_l2_for_ds.sql:7-33`): restrict to the day's slice (P2), window
     dedup latest-load_ds-wins per PK (W1), upsert updating ALL non-key
-    columns (U2)."""
-    l1 = spark.read.parquet(l1_path).select(*WEATHER_COLUMNS)
+    columns (U2).
+
+    W1 is the dedup ``merge_upsert`` runs on every source: L1's PK is
+    unique, so the day's slice holds one row per key already."""
+    l1 = spark.read.schema(WEATHER_SCHEMA).parquet(l1_path).select(*WEATHER_COLUMNS)
     day = l1.filter(F.col("load_ds") == F.lit(ds).cast("date"))
-    dedup = latest_per_key(day, keys=list(WEATHER_PK), order_by=[F.desc("load_ds")])
     merge_upsert(
         spark,
         target_path=l2_path,
-        source=dedup,
+        source=day,
         keys=list(WEATHER_PK),
         update_cols=list(L2_UPDATE_COLS),
         order_by=[F.desc("load_ds")],

@@ -52,6 +52,10 @@ WEATHER_SCHEMA = T.StructType(
 WEATHER_COLUMNS = tuple(f.name for f in WEATHER_SCHEMA.fields)
 WEATHER_PK = ("ts", "latitude", "longitude", "source")
 
+# Staging Parquet: the 9 columns plus the payload's array position, which
+# L1 needs for last-in-batch-wins arbitration (`load:140-147`).
+STAGING_SCHEMA = T.StructType(WEATHER_SCHEMA.fields + [T.StructField("pos", T.IntegerType())])
+
 # Conflict-update column sets — the two upserts differ deliberately
 # (SURVEY §2.6): L1 keeps first-seen date/hour
 # (`load_parquet_to_postgres_l1.py:56-60`), L2 updates everything

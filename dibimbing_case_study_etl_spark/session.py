@@ -32,6 +32,17 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of physical memory (≥ 1 GB):
+    in local mode the driver JVM is the whole engine, and the other half is
+    left to Python workers, the page cache and the OS."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2**31)}g"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -41,8 +52,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``driver_memory`` only takes effect if no JVM is running yet; in local
-    mode the driver is the only process so it is the one memory knob.
+    ``driver_memory`` (default :func:`default_driver_memory`) only takes
+    effect if no JVM is running yet; in local mode the driver is the only
+    process so it is the one memory knob.
     """
     cpus = default_parallelism()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -56,7 +68,7 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -14,10 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from dibimbing_case_study_etl_spark.operators.merge_upsert import merge_upsert
-from dibimbing_case_study_etl_spark.schemas import L1_UPDATE_COLS, WEATHER_PK, WEATHER_SCHEMA
+from dibimbing_case_study_etl_spark.schemas import L1_UPDATE_COLS, STAGING_SCHEMA, WEATHER_PK
 
 
 def incremental_l1(
@@ -31,8 +30,7 @@ def incremental_l1(
     Exactly-once across restarts: the checkpoint tracks consumed files, and
     merge_upsert is idempotent per batch, so replays converge.
     """
-    schema = T.StructType(WEATHER_SCHEMA.fields + [T.StructField("pos", T.IntegerType())])
-    stream = spark.readStream.schema(schema).parquet(staging_glob)
+    stream = spark.readStream.schema(STAGING_SCHEMA).parquet(staging_glob)
 
     def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():

@@ -1,16 +1,12 @@
 #!/usr/bin/env python
 """Profile registry queries one at a time in a warm session: wall seconds
-(noop sink), Spark job count, stage count, task count, and shuffle bytes
-per query — the per-operator measurement §1 of the optimization guide asks
-for before touching anything.
+per query (noop sink), best of --passes.
 
 Usage: python scripts/profile_queries.py out.json [name,name,...] [--passes=N]
 
 Defaults to the bench=True headline set. Each query is warmed once at
 sf0.001 (plan/codegen warmup, same as bench.py) and then timed --passes
 times at $SPARK_GRAFT_SF_DIR (default sf0.1); per-query min is reported.
-Job/stage/task counts come from the status tracker delta around the timed
-region of the LAST pass.
 """
 
 from __future__ import annotations
@@ -45,7 +41,6 @@ def main() -> None:
 
     spark = get_spark(app_name="profile-queries")
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
     results: dict[str, dict] = {}
     for name in names:
         spec = registry[name]

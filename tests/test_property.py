@@ -28,7 +28,8 @@ _SLOW = settings(
 merge_row = st.tuples(
     st.integers(min_value=0, max_value=3),
     st.integers(min_value=1, max_value=3),
-    st.floats(min_value=-100, max_value=100, allow_nan=False, width=32),
+    # None: a newer null must overwrite an older value (no coalesce)
+    st.none() | st.floats(min_value=-100, max_value=100, allow_nan=False, width=32),
 )
 batches_strategy = st.lists(st.lists(merge_row, min_size=1, max_size=6), min_size=1, max_size=3)
 
@@ -47,7 +48,7 @@ def test_merge_upsert_matches_sequential_model(spark, tmp_path_factory, batches)
     model: dict[int, tuple] = {}
     for batch in batches:
         rows = [
-            (k, dt.date(2025, 1, k + 1), dt.date(2025, 1, d), float(v), seq)
+            (k, dt.date(2025, 1, k + 1), dt.date(2025, 1, d), None if v is None else float(v), seq)
             for seq, (k, d, v) in enumerate(batch)
         ]
         df = spark.createDataFrame(rows, "k int, date date, load_ds date, val double, seq int")

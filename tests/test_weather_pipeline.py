@@ -68,6 +68,10 @@ def test_len_mismatch_raises(spark, cfg):
     bad["hourly"]["temperature_2m"] = bad["hourly"]["temperature_2m"][:-1]
     with pytest.raises(DataQualityError, match="hourly_arrays_same_length"):
         run_pipeline(spark, cfg, ds="2025-10-16", payload=bad)
+    # a missing array is a length mismatch too, not an empty dataset
+    del bad["hourly"]["time"]
+    with pytest.raises(DataQualityError, match="hourly_arrays_same_length"):
+        run_pipeline(spark, cfg, ds="2025-10-16", payload=bad)
 
 
 def test_empty_arrays_raise(spark, cfg):
@@ -197,3 +201,69 @@ def test_read_l2_asof_reproduces_historical_snapshot(spark, cfg):
     assert snap(read_l2_asof(spark, cfg, "2025-10-17")) == snapshot_d2
     # and as-of the newest day equals the live table
     assert snap(read_l2_asof(spark, cfg, "2025-10-18")) == live
+
+
+def test_newer_null_overwrites_in_l1_and_l2(spark, cfg):
+    """A reload whose temperature is null replaces the older value in both
+    layers, as the reference's ``SET temperature_c = EXCLUDED.temperature_c``
+    does; a merge that coalesced source and target would keep 10.0."""
+    run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(4, temps=[10.0] * 4))
+    run_pipeline(spark, cfg, ds="2025-10-17", payload=payload(2, temps=[None, 5.0]))
+    for path in (cfg.storage.l1_path, cfg.storage.l2_path):
+        got = {
+            r.hour: (r.temperature_c, r.load_ds)
+            for r in spark.read.parquet(path).collect()
+        }
+        assert got == {
+            0: (None, dt.date(2025, 10, 17)),
+            1: (5.0, dt.date(2025, 10, 17)),
+            2: (10.0, dt.date(2025, 10, 16)),
+            3: (10.0, dt.date(2025, 10, 16)),
+        }
+
+
+def test_second_ingest_day_stays_within_job_budget(spark, cfg):
+    """Fixed per-job cost dominates a small ingest day, so the job count of
+    one ``run_pipeline`` call is pinned: an ingest day into existing L1/L2
+    tables starts at most 16 Spark jobs."""
+    sc = spark.sparkContext
+    try:
+        for ds, start in (("2025-10-16", "2025-10-16T00:00"), ("2025-10-17", "2025-10-17T00:00")):
+            sc.setJobGroup(f"budget-{ds}", f"run_pipeline {ds}")
+            run_pipeline(spark, cfg, ds=ds, payload=payload(48, start=start))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(read_l2(spark, cfg).collect()) == 72
+    jobs = sc.statusTracker().getJobIdsForGroup("budget-2025-10-17")
+    assert 0 < len(jobs) <= 16, jobs
+
+
+def test_dq_failure_writes_nothing(spark, cfg):
+    """DQ runs before the staging write: a rejected day leaves no staging
+    directory and L1/L2 byte-for-byte as they were."""
+    import hashlib
+    import os
+
+    from dibimbing_case_study_etl_spark.pipeline.weather import staging_path_for_ds
+
+    def files(path):
+        return {
+            os.path.relpath(os.path.join(root, f), path): hashlib.sha256(
+                open(os.path.join(root, f), "rb").read()
+            ).hexdigest()
+            for root, _, fs in os.walk(path)
+            for f in fs
+        }
+
+    run_pipeline(spark, cfg, ds="2025-10-16", payload=payload(24))
+    before = {p: files(p) for p in (cfg.storage.l1_path, cfg.storage.l2_path)}
+    assert all(before.values())
+
+    bad = payload(24, start="2025-10-16T12:00")
+    bad["hourly"]["temperature_2m"] = bad["hourly"]["temperature_2m"][:-1]
+    with pytest.raises(DataQualityError, match="hourly_arrays_same_length"):
+        run_pipeline(spark, cfg, ds="2025-10-17", payload=bad)
+
+    assert not os.path.exists(staging_path_for_ds(cfg.storage.staging_dir, "2025-10-17"))
+    assert {p: files(p) for p in before} == before
